@@ -8,7 +8,7 @@ a plain frozen dataclass so it pickles cheaply into executor closures.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -63,21 +63,6 @@ class PipelineConfig:
     #     ref jerex/data_module.py:25-46) ---
     entity_types: tuple = ("PER", "ORG", "LOC", "MISC")
     relation_types: tuple = ("works_at", "based_in", "partner_of")
-    symmetric_relations: tuple = ("partner_of",)
-
-    # --- scale knobs ---
-    shuffle_partitions: int = 32
-    arrow_max_records_per_batch: int = 256
-    salt_buckets: int = 64           # salted repartition fan-out for skew
-    # extract partitions per available core (pipeline.salted_repartition):
-    # each mapInPandas partition pays a fixed Python-worker round trip,
-    # so 1 task/core minimizes that overhead (measured 0.69s vs 0.94s
-    # for the sf0.1 flagship at 1x vs 2x); hot-host skew is already
-    # spread by the salted doc-key hash, and heavy-tailed per-doc cost
-    # has its own remedy (cost_balanced_repartition).  Raise per
-    # deployment when straggler smoothing matters more than the
-    # per-partition overhead (many-node clusters with churn).
-    extract_partitions_per_core: int = 1
 
 
 DEFAULT = PipelineConfig()

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..canonicalize import MAX_ED_RATIO, N_HASHES, SHINGLE_C, \
     canonicalize_entities
+from .textops import _docs
 
 ALIASES = [
     ("scan", "Q_SCAN"),        # exact corpus word
@@ -28,7 +29,7 @@ ALIASES = [
 
 
 def canon_gazetteer(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _docs(spark, sf_dir)
     # spread by doc-id hash before the word explode: a compact input
     # (single parquet split) would run the explode + distinct map side
     # on one task; the raw text moves once, deterministic, sized from

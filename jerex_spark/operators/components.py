@@ -38,7 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import MINHASH_SQL, _docs, lsh_pair_graph
+from .dedup import MINHASH_SQL, lsh_pair_graph
+from .textops import _docs
 
 # O(log n) convergence: 64 rounds covers any conceivable corpus
 # (2^64 nodes); hitting the cap means a bug, not a big input — raise.

@@ -36,8 +36,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .components import connected_components
-from .dedup import MINHASH_SQL, _docs, lsh_pair_graph
-from .textops import QUALITY_SQL, _langid_sql, pred_lang_expr, quality_expr
+from .dedup import MINHASH_SQL, lsh_pair_graph
+from .textops import (QUALITY_SQL, _docs, _langid_sql, pred_lang_expr,
+                      quality_expr)
 
 # operating point: English-predicted docs at >= the corpus's median
 # quality (0.35 at the synthetic corpus; quality is ROUND(..,4)-ed

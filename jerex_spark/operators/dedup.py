@@ -41,10 +41,7 @@ MAX_ALLPAIRS_ROWS = 10_000
 # each query so repeated invocations don't accumulate cached blocks.
 from ..caching import persist_tracked as _persist
 from ..caching import release_persisted  # noqa: F401  (re-export)
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from .textops import _docs
 
 
 # --- exact dedup: hash-groupBy ------------------------------------------

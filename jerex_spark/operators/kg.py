@@ -199,6 +199,15 @@ def _undirected(t):
     return out_.unionByName(in_)
 
 
+def _edge_set(t):
+    """(doc_key, e, nbr): the distinct, self-loop-free undirected edge
+    set the iterative graph kernels start from, ``localCheckpoint``-ed
+    so each round's plan references it instead of the extract."""
+    nz = t.filter(F.col("head_idx") != F.col("tail_idx"))
+    return (_undirected(nz).select("doc_key", "e", "nbr").distinct()
+            .localCheckpoint())
+
+
 def kg_entity_degree(spark, sf_dir):
     """(doc_key, entity_idx, n_out, n_in, out_neighbors, in_neighbors,
     degree) for every entity that participates in >= 1 emitted triple:
@@ -554,13 +563,7 @@ def _communities_from(t):
     subgraph stays partition-local and a round costs one co-partitioned
     join + groupBy + per-key top-1."""
     from pyspark.sql.window import Window
-    nz = t.filter(F.col("head_idx") != F.col("tail_idx"))
-    ed = (nz.select("doc_key", F.col("head_idx").alias("e"),
-                    F.col("tail_idx").alias("nbr"))
-          .unionByName(
-              nz.select("doc_key", F.col("tail_idx").alias("e"),
-                        F.col("head_idx").alias("nbr")))
-          .distinct().localCheckpoint())
+    ed = _edge_set(t)
     labels = (ed.select("doc_key", "e").distinct()
               .withColumn("lbl", F.col("e")))
     w = Window.partitionBy("doc_key", "e").orderBy(
@@ -647,13 +650,7 @@ def _kcore_from(t):
     per round otherwise).  All stages keyed (doc_key, node): at
     100 TB each document's subgraph stays partition-local and a round
     costs one groupBy plus two co-partitioned semi-joins."""
-    nz = t.filter(F.col("head_idx") != F.col("tail_idx"))
-    ed = (nz.select("doc_key", F.col("head_idx").alias("e"),
-                    F.col("tail_idx").alias("nbr"))
-          .unionByName(
-              nz.select("doc_key", F.col("tail_idx").alias("e"),
-                        F.col("head_idx").alias("nbr")))
-          .distinct().localCheckpoint())
+    ed = _edge_set(t)
     for _ in range(KCORE_ROUNDS):
         keep = (ed.groupBy("doc_key", "e")
                 .agg(F.count("*").alias("deg"))
@@ -730,13 +727,7 @@ def _bfs_from(t):
     the union doubles the plan otherwise — the pattern every iterative
     kernel in this module uses).  All stages keyed (doc_key, node):
     partition-local per document at any corpus size."""
-    nz = t.filter(F.col("head_idx") != F.col("tail_idx"))
-    ed = (nz.select("doc_key", F.col("head_idx").alias("e"),
-                    F.col("tail_idx").alias("nbr"))
-          .unionByName(
-              nz.select("doc_key", F.col("tail_idx").alias("e"),
-                        F.col("head_idx").alias("nbr")))
-          .distinct().localCheckpoint())
+    ed = _edge_set(t)
     dist = (ed.groupBy("doc_key").agg(F.min("e").alias("e"))
             .withColumn("dist", F.lit(0)))
     for r in range(1, BFS_ROUNDS + 1):

@@ -10,6 +10,9 @@ JVM-side via higher-order functions (zip_with/aggregate) — no Python.
 
 from __future__ import annotations
 
+import functools
+import hashlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -78,25 +81,19 @@ FROM top WHERE rank <= {TOP_K}
 
 
 # --- sign-LSH bucketing (scale path; golden-oracle-backed) ---------------
-_PLANE_CACHE: dict[tuple[int, int], list[float]] = {}
-
-
-def _plane_weights(p: int, dim: int = 64) -> list[float]:
+# Bounded at MAX_BANDS x 32 planes (codes pack into int32, so no
+# schedule is wider), so one query's planes never evict each other.
+@functools.lru_cache(maxsize=256 * 32)
+def _plane_weights(p: int, dim: int = 64) -> tuple[float, ...]:
     """Deterministic pseudo-random hyperplane: component j of plane p =
     +1/-1 by parity of the first md5 nibble of 'plane{p}|{j}' — the
     same values the DuckDB oracle derives in SQL.  Memoized: these are
     pure constants of (p, dim), and the auto schedule derives 100+
     planes per query, so re-hashing 64 md5s per plane per invocation
     was a measured slice of driver-side construction time."""
-    key = (p, dim)
-    w = _PLANE_CACHE.get(key)
-    if w is None:
-        import hashlib
-        w = [1.0 if int(hashlib.md5(f"plane{p}|{j}".encode())
-                        .hexdigest()[0], 16) % 2 == 0 else -1.0
-             for j in range(dim)]
-        _PLANE_CACHE[key] = w
-    return w
+    return tuple(1.0 if int(hashlib.md5(f"plane{p}|{j}".encode())
+                            .hexdigest()[0], 16) % 2 == 0 else -1.0
+                 for j in range(dim))
 
 
 def _plane_expr(p: int, dim: int = 64) -> str:

@@ -29,18 +29,20 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "lang", "source")
 
 
-def salted_repartition(df: DataFrame, key: str = "doc_key",
-                       cfg: PipelineConfig = DEFAULT) -> DataFrame:
+def salted_repartition(df: DataFrame, key: str = "doc_key") -> DataFrame:
     """Skew-defeating repartition before the heavy extract UDF.
 
     Web corpora are skewed by host/language; hashing the full document
     key with a salt spreads hot hosts across all partitions (SURVEY.md
-    §4 item 2).  xxhash64 is cheap, JVM-side, and deterministic.  The
-    fan-out is ``cores x cfg.extract_partitions_per_core`` — see the
-    config for the measured task-granularity trade-off."""
-    n = (df.sparkSession.sparkContext.defaultParallelism
-         * cfg.extract_partitions_per_core)
-    return df.repartition(n, F.xxhash64(F.col(key), F.lit(cfg.weight_seed)))
+    §4 item 2).  xxhash64 is cheap, JVM-side, and deterministic.
+
+    The fan-out is one partition per core: each mapInPandas partition
+    pays a fixed Python-worker round trip, so 1 task/core minimizes
+    that overhead (measured 0.69s vs 0.94s for the sf0.1 flagship at
+    1x vs 2x); heavy-tailed per-doc cost has its own remedy
+    (cost_balanced_repartition)."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+                          F.xxhash64(F.col(key), F.lit(DEFAULT.weight_seed)))
 
 
 def cost_balanced_repartition(df: DataFrame, cost: "F.Column",
@@ -106,7 +108,7 @@ def cost_balanced_repartition(df: DataFrame, cost: "F.Column",
 def build_graph(documents: DataFrame,
                 cfg: PipelineConfig = DEFAULT) -> DataFrame:
     """documents(doc_key, text, ...) -> persisted nested doc-graph."""
-    return extract_graph(salted_repartition(documents, cfg=cfg), cfg)
+    return extract_graph(salted_repartition(documents), cfg)
 
 
 def kg_tables(graph: DataFrame) -> dict[str, DataFrame]:

@@ -12,11 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .config import DEFAULT, PipelineConfig
-
 
 def build_session(app: str = "jerex-spark", master: str | None = None,
-                  cfg: PipelineConfig = DEFAULT,
                   extra: dict | None = None) -> SparkSession:
     # one BLAS thread per python worker: with N workers per node, letting
     # OpenBLAS spawn N threads each oversubscribes N^2 threads and the
@@ -30,7 +27,7 @@ def build_session(app: str = "jerex-spark", master: str | None = None,
     b = (
         SparkSession.builder.appName(app).master(master)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -47,8 +44,7 @@ def build_session(app: str = "jerex-spark", master: str | None = None,
                 "org.apache.spark.sql.catalyst.optimizer."
                 "InferFiltersFromGenerate")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(cfg.arrow_max_records_per_batch))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -1,5 +1,5 @@
-"""Corpus generation determinism, html->text byte identity, entity
-canonicalization (broadcast + LSH + verify), and multimodal plumbing.
+"""Corpus generation determinism, html->text byte identity, and entity
+canonicalization (broadcast + LSH + verify).
 """
 
 from __future__ import annotations

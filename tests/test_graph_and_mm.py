@@ -1,5 +1,5 @@
-"""Graph materialization, multimodal plumbing, and the full
-pages -> canonical-graph integration path."""
+"""Graph materialization and the full pages -> canonical-graph
+integration path."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from jerex_spark.corpus import make_pages
 from jerex_spark.extract import extract_graph
 from jerex_spark.graph import (canonical_entity_table, canonical_triples,
                                edges, entity_phrases)
-from jerex_spark.multimodal import media_features
 from jerex_spark.pipeline import kg_tables
 
 
@@ -61,34 +60,6 @@ def test_alias_hits_collapse_across_docs(spark, pages_graph):
     hits = canon.filter(F.col("canonical_id") == "Q_ACME")
     if hits.count() >= 2:   # corpus plants acme in many docs
         assert hits.select("doc_key").distinct().count() >= 2
-
-
-def test_media_features_plumbing(spark):
-    rows = [("d1", 0, "image", bytearray(b"\x89PNG fake bytes")),
-            ("d1", 1, "image", bytearray(b"other payload")),
-            ("d2", 0, "audio", bytearray(b"RIFF fake"))]
-    media = spark.createDataFrame(
-        rows, "doc_key string, media_idx int, kind string, payload binary")
-    out = media_features(media).collect()
-    assert len(out) == 3
-    by_key = {(r.doc_key, r.media_idx): r for r in out}
-    r = by_key[("d1", 0)]
-    assert r.n_bytes == 15 and len(r.embedding) == 16
-    assert r.width > 0 and r.height > 0
-    # determinism: same payload -> same features on re-run
-    out2 = media_features(media).collect()
-    assert {(r.doc_key, r.media_idx, r.content_crc, tuple(r.embedding))
-            for r in out} == \
-           {(r.doc_key, r.media_idx, r.content_crc, tuple(r.embedding))
-            for r in out2}
-
-
-def test_media_empty_payload_raises_cleanly(spark):
-    media = spark.createDataFrame(
-        [("d", 0, "image", bytearray(b""))],
-        "doc_key string, media_idx int, kind string, payload binary")
-    with pytest.raises(Exception, match="NotImplementedError|decode"):
-        media_features(media).collect()
 
 
 def test_examples_html_sink(spark, pages_graph, tmp_path):
