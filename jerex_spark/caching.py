@@ -1,11 +1,11 @@
 """Session-scoped cache registry.
 
-Operators that persist intermediate DataFrames (dedup signatures,
-canonicalization vocabularies) register them here so long-lived driver
-sessions (notebooks, services, the bench loop) can release the cached
-blocks once a query's final action has run, instead of leaking them
-until session shutdown.  bench.py and the test session fixture call
-``release_persisted()`` between queries.
+Operators that persist intermediate DataFrames (dedup signatures, the
+canonicalization stage's per-form verdict) register them here so
+long-lived driver sessions (notebooks, services, the bench loop) can
+release the cached blocks once a query's final action has run, instead
+of leaking them until session shutdown.  bench.py and the test session
+fixture call ``release_persisted()`` between queries.
 
 ``localCheckpoint`` blocks (dedup's ``rp`` pairs, the kg graph loops,
 the components closure) are not registered here:

@@ -18,7 +18,10 @@ per-document entity clusters into corpus-level canonical ids:
 
 Scale path: step 2 is a broadcast join (no shuffle of the big side);
 step 3 shuffles only the *unmatched minority* on (hash_id, sig), which
-AQE skew-splits if one band is hot.  No driver-side loops.
+AQE skew-splits if one band is hot.  The verdict is persisted, so AQE
+covers these shuffles only because the session turns on
+``canChangeCachedPlanOutputPartitioning`` (session.py).  No driver-side
+loops.
 """
 
 from __future__ import annotations
@@ -41,9 +44,10 @@ def _char_shingles(col_name: str, k: int = SHINGLE_C):
     form cost ~a dozen py4j round trips per call site, a measured
     slice of canon_gazetteer's driver-side construction time — the
     parsed expression tree is identical."""
+    c = f"`{col_name}`"   # quoted: a keyword or a name with a space
     return F.expr(
-        f"transform(sequence(1, greatest(length({col_name}) - {k - 1}, "
-        f"1)), i -> substring({col_name}, i, {k}))")
+        f"transform(sequence(1, greatest(length({c}) - {k - 1}, "
+        f"1)), i -> substring({c}, i, {k}))")
 
 
 def _minhash_sigs(df: DataFrame, text_col: str, id_cols: list[str]):
@@ -58,7 +62,7 @@ def _minhash_sigs(df: DataFrame, text_col: str, id_cols: list[str]):
     def one_min(i: int):
         # one F.expr per hash id (construction cost; identical tree)
         return F.expr(
-            f"array_min(transform(sharr, "
+            f"array_min(transform(`sharr`, "
             f"s -> md5(concat_ws('|', '{i}', s))))").alias(f"s{i}")
 
     mins = (df.select(*id_cols,
@@ -141,10 +145,16 @@ def canonicalize_entities(entities: DataFrame, alias_dict: DataFrame,
     of magnitude smaller than the instance table on any Zipfian corpus.
     The verdict join carries no hint: AQE broadcasts it when the
     vocabulary is small and falls back to a shuffle join when it isn't.
+
+    The verdict is persisted: the KG tail reads the result twice (the
+    canonical triples and the entity table), and uncached each read
+    would re-run the LSH verify and its window.  The cached plan keeps
+    AQE (session.py), and ``release_persisted()`` frees it.
     """
     from .caching import persist_tracked
     ents = entities.withColumn("norm", normalize_phrase(F.col(phrase_col)))
-    # vocabulary feeds both the exact and miss branches: cache it
-    forms = persist_tracked(ents.select("norm").distinct())
-    verdict = canonicalize_form_verdicts(forms, alias_dict)
+    # the vocabulary feeds both the exact and miss branches; inside the
+    # cached verdict plan the two share one exchange (ReusedExchange)
+    forms = ents.select("norm").distinct()
+    verdict = persist_tracked(canonicalize_form_verdicts(forms, alias_dict))
     return ents.join(verdict, "norm").drop("norm")

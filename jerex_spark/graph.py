@@ -12,9 +12,12 @@ Dedup keys follow the reference's eval identity (within-doc: mention
 span set — ref jerex/evaluation/conversion.py:4-17; across docs:
 canonical id).  All aggregations are partial-agg friendly; the only
 shuffles are the two groupBys on canonical keys, which AQE skew-splits
-(hot entities like countries are real at web scale).  Writes are
-partitioned by ``rel_type`` (low cardinality, stable) so consumers
-prune partitions.
+(hot entities like countries are real at web scale) and coalesces to
+the data's size.  That holds for the persisted ``ct`` too, because the
+session lets AQE re-plan cached plans (session.py); Spark's default
+would run the cached groupBy as a fixed 32 tasks over a few kilobytes.
+Writes are partitioned by ``rel_type`` (low cardinality, stable) so
+consumers prune partitions.
 """
 
 from __future__ import annotations

@@ -82,8 +82,8 @@ def _shingle_array(k: int = SHINGLE_K):
     expression tree is identical."""
     return F.expr(
         f"array_distinct(transform("
-        f"sequence(0, greatest(size(l) - {k}, 0)), "
-        f"i -> concat_ws(' ', slice(l, i + 1, {k}))))")
+        f"sequence(0, greatest(size(`l`) - {k}, 0)), "
+        f"i -> concat_ws(' ', slice(`l`, i + 1, {k}))))")
 
 
 def _split_docs(spark, sf_dir, k: int, docs_df):
@@ -223,7 +223,7 @@ def _sig_table(sharr_df):
         # one F.expr per hash id (vs ~8 py4j calls each composed):
         # construction cost, not plan shape — the tree is identical
         return F.expr(
-            f"array_min(transform(sharr, "
+            f"array_min(transform(`sharr`, "
             f"s -> md5(concat_ws('|', '{i}', s))))").alias(f"s{i}")
 
     mins = sharr_df.select("doc_id",

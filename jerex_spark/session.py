@@ -4,6 +4,12 @@ Pin UTC so DuckDB-oracle comparisons are stable, enable AQE (runtime
 coalescing + skew-join splitting for the canonicalization/dedup
 shuffles), and bound Arrow batch size so the extract UDF's per-batch
 memory stays flat regardless of input partition size.
+
+AQE also runs inside persisted plans: the extract ``graph``, the
+canonicalization verdict and the canonical triples ``ct`` are cached,
+and pyspark 4.1 plans a cached plan without AQE unless
+``canChangeCachedPlanOutputPartitioning`` is on, so their shuffles
+would run a fixed 32 tasks over a few kilobytes.
 """
 
 from __future__ import annotations
@@ -31,6 +37,12 @@ def build_session(app: str = "jerex-spark", master: str | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # AQE inside cached plans (module docstring).  Spark defaults
+        # to false because a cached plan's output partitioning can then
+        # differ from the uncached one's, so a consumer may add an
+        # exchange.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         # InferFiltersFromGenerate copies the generator's child into an
         # inferred `size(child) > 0` filter, so an expensive generator
         # input (the shingle transform: split -> transform -> concat_ws

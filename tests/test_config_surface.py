@@ -19,6 +19,12 @@ def test_build_session_sets_shuffle_and_arrow_batch(spark):
     assert conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "256"
 
 
+def test_build_session_lets_aqe_run_inside_cached_plans(spark):
+    assert spark.conf.get(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") \
+        == "true"
+
+
 def test_salted_repartition_one_partition_per_core(spark):
     from jerex_spark.pipeline import salted_repartition
     df = spark.createDataFrame([(f"d{i}", "x") for i in range(100)],

@@ -83,3 +83,25 @@ def test_canonicalize_deterministic_best(spark):
         [("d", 0, "abcdeh")], ["doc_key", "entity_idx", "phrase"])
     rows = canonicalize_entities(ents, alias).collect()
     assert rows[0].canonical_id == "Q1"
+
+
+@pytest.mark.parametrize("name", ["order", "surface form"])
+def test_shingles_and_sigs_quote_the_column_name(spark, name):
+    """The shingle and signature builders interpolate the column name
+    into ``F.expr`` strings; a SQL keyword or a name with a space must
+    give the same shingles and signatures as ``norm``."""
+    from jerex_spark.canonicalize import _char_shingles, _minhash_sigs
+    vals = [("acme corp",), ("ab",), ("globex",)]
+    base = spark.createDataFrame(vals, ["norm"])
+    odd = spark.createDataFrame(vals, [name])
+
+    def shingles(df, c):
+        return sorted(tuple(r[0]) for r in df.select(_char_shingles(c))
+                      .collect())
+
+    def sigs(df, c):
+        return sorted(tuple(r) for r in _minhash_sigs(df, c, [c])
+                      .collect())
+
+    assert shingles(odd, name) == shingles(base, "norm")
+    assert sigs(odd, name) == sigs(base, "norm")
