@@ -5,7 +5,8 @@ Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec",
-     "queries": {...}, "sf": ..., "docs_per_sec": ...}
+     "queries": {...}, "codegen_compiles": {...}, "sf": ...,
+     "docs_per_sec": ...}
 
 ``--scaling`` additionally runs the flagship extract at two
 parallelism levels (local[8] vs local[32]) on the same input and
@@ -62,26 +63,30 @@ def run_suite(spark, sf_dir, runs: int = BENCH_RUNS):
     standard noise-robust estimator of true cost.  The first (cold)
     timing is kept alongside for the cache/warm-up delta.
 
-    Measurement note (round 5): ivf_topk's warm runs reuse the cached
-    quantizer centroids (a one-time-per-corpus cost, like codegen), so
-    its best-of-N measures steady-state search cost; the full path
-    including the sample job + k-means fit is what queries_cold
-    reports."""
+    Best-of-N hides a cost every warm run pays again, such as generated
+    classes evicted from Spark's codegen cache and compiled anew, so
+    each query also records how many classes its cold run and each warm
+    run compiled."""
     from jerex_spark.caching import release_persisted
     from jerex_spark.operators import all_queries
+    from jerex_spark.session import codegen_compile_count
     qs = all_queries()
-    best, cold, rows = {}, {}, {}
+    best, cold, rows, compiles = {}, {}, {}, {}
     for name in BENCH_QUERIES:
         fn, _sql = qs[name]
+        counts = []
         for i in range(runs):
+            c0 = codegen_compile_count(spark)
             t0 = time.time()
             rows[name] = _count(fn(spark, sf_dir))
             dt = round(time.time() - t0, 3)
             release_persisted()
+            counts.append(codegen_compile_count(spark) - c0)
             if i == 0:
                 cold[name] = dt
             best[name] = min(best.get(name, dt), dt)
-    return best, cold, rows
+        compiles[name] = {"cold": counts[0], "warm": counts[1:]}
+    return best, cold, rows, compiles
 
 
 def flagship_wall(master: str, sf_dir: str, replicate: int = 1,
@@ -216,7 +221,7 @@ def main():
             _release()
         warmup = round(time.time() - t_w, 3)
         t0 = time.time()
-        timings, cold, rows = run_suite(spark, SF_DIR)
+        timings, cold, rows, compiles = run_suite(spark, SF_DIR)
         total = round(time.time() - t0, 3)
         print(json.dumps({
             "metric": "bench_suite_best_sum",
@@ -226,6 +231,7 @@ def main():
             "runs_per_query": BENCH_RUNS,
             "suite_wall_all_runs": total,
             "rows": rows,
+            "codegen_compiles": compiles,
             "warmup_sec": warmup,
             "docs_per_sec_extract": round(
                 n_docs / max(timings["kg_triples"], 1e-9), 1),

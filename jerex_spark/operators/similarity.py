@@ -360,34 +360,6 @@ N_PROBE = 10
 KMEANS_SAMPLE_TARGET = 400 * N_CELLS   # training points for the quantizer
 KMEANS_MAX_ITER = 8
 
-# quantizer centroids per corpus: the coarse quantizer is a pure
-# function of the corpus (deterministic hash-sample + pinned seed), so
-# repeat ivf_topk calls in one session — bench loops, notebooks — skip
-# the sample job + fit.  The key carries a FILE signature (relative
-# path, size, mtime of every file under the embeddings path) alongside
-# (sf_dir, row count), so a corpus rewritten in place invalidates the
-# cache instead of silently serving stale centroids.
-_CENTROID_CACHE: dict[tuple, "np.ndarray"] = {}
-
-
-def _file_sig(path: str) -> tuple:
-    """Cheap content-change signature of a parquet file/directory:
-    sorted (relpath, size, mtime_ns) of every file under it.  Pure
-    driver-side stat calls — no Spark job."""
-    import os
-    if os.path.isfile(path):
-        st = os.stat(path)
-        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
-    out = []
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            fp = os.path.join(root, f)
-            st = os.stat(fp)
-            out.append((os.path.relpath(fp, path), st.st_size,
-                        st.st_mtime_ns))
-    return tuple(sorted(out))
-
-
 def _fit_kmeans_np(X, k: int, seed: int = 42,
                    iters: int = KMEANS_MAX_ITER):
     """Deterministic Lloyd's k-means with k-means++ init on a bounded
@@ -480,17 +452,13 @@ def ivf_topk(spark, sf_dir, top_k: int = TOP_K,
     # over the table and the driver never holds more than TARGET rows —
     # no extra count() action to size a fraction (the v2 per-mille
     # scheme needed one, and its 1/1000 floor grew the sample ~n/1000).
+    # That pass also materializes the persisted table the join reads.
     import numpy as np
-    # the count also materializes the persisted table we join below
-    ckey = (sf_dir, emb.count(),
-            _file_sig(f"{sf_dir}/embeddings.parquet"))
-    C = _CENTROID_CACHE.get(ckey)
-    if C is None:
-        sample = np.asarray(
-            emb.orderBy(F.xxhash64(F.col("vec_id")), F.col("vec_id"))
-            .limit(KMEANS_SAMPLE_TARGET).select("vec")
-            .toPandas()["vec"].tolist())
-        C = _CENTROID_CACHE[ckey] = _fit_kmeans_np(sample, N_CELLS)
+    sample = np.asarray(
+        emb.orderBy(F.xxhash64(F.col("vec_id")), F.col("vec_id"))
+        .limit(KMEANS_SAMPLE_TARGET).select("vec")
+        .toPandas()["vec"].tolist())
+    C = _fit_kmeans_np(sample, N_CELLS)
     assigned = emb.select("vec_id", "vec", "norm",
                           _cell_assign_col(C).alias("cell"))
 

@@ -10,6 +10,25 @@ canonicalization verdict and the canonical triples ``ct`` are cached,
 and pyspark 4.1 plans a cached plan without AQE unless
 ``canChangeCachedPlanOutputPartitioning`` is on, so their shuffles
 would run a fixed 32 tasks over a few kilobytes.
+
+Spark's generated-code cache is sized to a pass's working set.
+``CodeGenerator`` keeps compiled classes in an LRU cache of
+``spark.sql.codegen.cache.maxEntries`` entries, a static conf with
+default 100.  One pass compiles more distinct classes than that
+(measured on a 4-core host, cold pass with an unbounded cache): 175 for
+a perfbench ``crawl_pages`` pass, 151 for an ``operator_suite`` pass and
+291 for the 19 ``bench.BENCH_QUERIES`` at sf0.01.  A cyclic access
+pattern larger than an LRU cache never hits, so at 100 every warm pass
+recompiled every class (166-171 per crawl pass, 144 per suite pass):
+~2 s and ~1 s of Janino, plus JIT warm-up of the freshly loaded classes.
+1000 entries hold the largest pass more than twice over.
+
+AQE numbers whole-stage codegen stages in re-plan order, and that
+order can change between passes, so with the stage id in the class
+name an identical stage came back as ``...Stage7`` or ``...Stage8``
+with different source text and was compiled again.
+``useIdInClassName=false`` drops the id: crawl passes 2-5 then compile
+5/4/2/2 classes instead of 30/8/5/4.
 """
 
 from __future__ import annotations
@@ -43,6 +62,10 @@ def build_session(app: str = "jerex-spark", master: str | None = None,
         # exchange.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "true")
+        # codegen class cache sized to a pass's working set, and no
+        # AQE-order-dependent stage id in class names (module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # InferFiltersFromGenerate copies the generator's child into an
         # inferred `size(child) > 0` filter, so an expensive generator
         # input (the shingle transform: split -> transform -> concat_ws
@@ -81,3 +104,11 @@ def build_session(app: str = "jerex-spark", master: str | None = None,
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def codegen_compile_count(spark) -> int:
+    """Generated classes this JVM has compiled so far (cache misses of
+    Spark's codegen cache); the difference of two reads counts the
+    compiles in between."""
+    return (spark.sparkContext._jvm.org.apache.spark.metrics.source
+            .CodegenMetrics.METRIC_COMPILATION_TIME().getCount())

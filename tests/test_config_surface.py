@@ -1,6 +1,7 @@
 """Pins for the configuration surface: the session confs and the
 extract fan-out written as literals, a reader for every PipelineConfig
-field, the query registry's order and the LSH plane cache's bound."""
+field, the query registry's order, the LSH plane cache's bound and the
+codegen class cache's size."""
 
 from __future__ import annotations
 
@@ -23,6 +24,43 @@ def test_build_session_lets_aqe_run_inside_cached_plans(spark):
     assert spark.conf.get(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") \
         == "true"
+
+
+def test_build_session_sizes_the_codegen_cache(spark):
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    assert conf.get("spark.sql.codegen.useIdInClassName") == "false"
+
+
+def test_codegen_cache_holds_a_cycle_past_the_default(spark):
+    """A cycle of 150 distinct projections (an int literal is inlined, so
+    each generated source differs; 300 classes in all) is larger than
+    Spark's default 100-entry LRU cache, where every repeat would miss.
+    The session's cache holds the cycle: the second pass compiles
+    nothing."""
+    from pyspark.sql import functions as F
+
+    from jerex_spark.session import codegen_compile_count
+
+    def cycle():
+        c0 = codegen_compile_count(spark)
+        for i in range(150):
+            spark.range(4).select((F.col("id") + F.lit(i)).alias("x")) \
+                .collect()
+        return codegen_compile_count(spark) - c0
+
+    assert cycle() > 100
+    assert cycle() == 0
+
+
+def test_bench_records_codegen_compiles(spark, sf0001, monkeypatch):
+    """bench.run_suite records each query's compiles per run, so a warm
+    run that recompiles shows up even though best-of-N hides its time."""
+    import bench
+    monkeypatch.setattr(bench, "BENCH_QUERIES", ("tpch_q1",))
+    _best, _cold, _rows, compiles = bench.run_suite(spark, sf0001, runs=3)
+    assert compiles["tpch_q1"]["warm"] == [0, 0]
+    assert compiles["tpch_q1"]["cold"] >= 0
 
 
 def test_salted_repartition_one_partition_per_core(spark):

@@ -238,35 +238,3 @@ def test_lsh_schedule_small_n_unchanged():
         assert lsh_schedule(2000, design_cos=0.4, min_bands=24) == (29, 5)
         assert lsh_schedule(500, design_cos=0.45, min_bands=16) == (16, 4)
         assert lsh_schedule(2000, design_cos=0.45, min_bands=16) == (25, 5)
-
-
-def test_ivf_centroid_cache_invalidates_on_rewrite(spark, tmp_path):
-    """The per-corpus quantizer cache must key on file content
-    signature, not just (path, row count): a corpus rewritten in place
-    with the same cardinality gets fresh centroids."""
-    import numpy as np
-    import pandas as pd
-
-    from jerex_spark.caching import release_persisted
-    from jerex_spark.operators.similarity import _CENTROID_CACHE, ivf_topk
-
-    def write(seed):
-        r = np.random.default_rng(seed)
-        pd.DataFrame({
-            "vec_id": range(60),
-            "embedding": [[float(x) for x in r.normal(size=64)]
-                          for _ in range(60)],
-        }).to_parquet(tmp_path / "embeddings.parquet", index=False)
-
-    write(1)
-    n0 = len(_CENTROID_CACHE)
-    ivf_topk(spark, str(tmp_path)).count()
-    release_persisted()
-    assert len(_CENTROID_CACHE) == n0 + 1
-    ivf_topk(spark, str(tmp_path)).count()          # same corpus: hit
-    release_persisted()
-    assert len(_CENTROID_CACHE) == n0 + 1
-    write(2)                                        # same rows, new data
-    ivf_topk(spark, str(tmp_path)).count()
-    release_persisted()
-    assert len(_CENTROID_CACHE) == n0 + 2           # miss: re-fit
