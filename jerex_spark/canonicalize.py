@@ -134,9 +134,9 @@ def canonicalize_form_verdicts(forms: DataFrame,
     return hit_forms.unionByName(fuzzy)
 
 
-def canonicalize_entities(entities: DataFrame, alias_dict: DataFrame,
-                          phrase_col: str = "phrase") -> DataFrame:
-    """entities(doc_key, entity_idx, <phrase_col>, ...) x
+def canonicalize_entities(entities: DataFrame,
+                          alias_dict: DataFrame) -> DataFrame:
+    """entities(doc_key, entity_idx, phrase, ...) x
     alias_dict(alias, canonical_id) -> + (canonical_id, match_kind).
 
     Runs the alias/LSH/verify stage once per DISTINCT normalized
@@ -152,7 +152,7 @@ def canonicalize_entities(entities: DataFrame, alias_dict: DataFrame,
     AQE (session.py), and ``release_persisted()`` frees it.
     """
     from .caching import persist_tracked
-    ents = entities.withColumn("norm", normalize_phrase(F.col(phrase_col)))
+    ents = entities.withColumn("norm", normalize_phrase(F.col("phrase")))
     # the vocabulary feeds both the exact and miss branches; inside the
     # cached verdict plan the two share one exchange (ReusedExchange)
     forms = ents.select("norm").distinct()

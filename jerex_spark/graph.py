@@ -10,12 +10,17 @@ corpus, and produce the three output tables a KG consumer reads:
 
 Dedup keys follow the reference's eval identity (within-doc: mention
 span set — ref jerex/evaluation/conversion.py:4-17; across docs:
-canonical id).  All aggregations are partial-agg friendly; the only
-shuffles are the two groupBys on canonical keys, which AQE skew-splits
-(hot entities like countries are real at web scale) and coalesces to
-the data's size.  That holds for the persisted ``ct`` too, because the
-session lets AQE re-plan cached plans (session.py); Spark's default
-would run the cached groupBy as a fixed 32 tasks over a few kilobytes.
+canonical id).  All aggregations are partial-agg friendly.  The
+shuffles are the three groupBys on canonical keys: one exchange for
+``edges``, two each for ``canonical_triples`` and
+``canonical_entity_table``, whose ``countDistinct`` first shuffles rows
+on (keys, doc_key) and then only partial aggregates on the keys.  The
+joins onto per-doc entities are broadcast, or planned as shuffles that
+AQE turns into broadcasts once it sees a side is small.  AQE also
+coalesces every exchange to the data's size.  That holds for the
+persisted ``ct`` too, because the session lets AQE re-plan cached plans
+(session.py); Spark's default would run the cached groupBy as a fixed
+32 tasks over a few kilobytes.
 Writes are partitioned by ``rel_type`` (low cardinality, stable) so
 consumers prune partitions.
 """
@@ -24,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+MAX_SURFACES = 100     # surface forms kept per canonical entity
 
 
 def entity_phrases(mentions: DataFrame, entities: DataFrame) -> DataFrame:
@@ -67,65 +74,26 @@ def canonical_triples(triples: DataFrame,
                  F.countDistinct("doc_key").alias("n_docs")))
 
 
-def salted_two_phase(df: DataFrame, keys: list[str], partials: list,
-                     finals: list, n_salt: int = 64) -> DataFrame:
-    """Two-phase aggregation with an explicit salt for skewed keys
-    (north rule: hot canonical entities — countries, famous people —
-    concentrate a naive groupBy into one reducer).  Phase 1 groups by
-    (keys, salt) so a hot key spreads over ``n_salt`` reducers; phase 2
-    merges the per-salt partials.  The salt is a deterministic hash of
-    all columns, so re-runs are stable.
+def canonical_entity_table(canon_entities: DataFrame) -> DataFrame:
+    """Per-canonical-entity rollup: one groupBy on ``canonical_id``.
 
-    ``partials``: aggregate columns for phase 1 (aliased);
-    ``finals``: merge expressions over those aliases for phase 2.
+    ``countDistinct("doc_key")`` makes Spark plan its distinct-aggregate
+    rewrite: raw rows are shuffled on (canonical_id, doc_key), so a hot
+    id spreads over reducers because doc_key varies, and only per-task
+    partial aggregates cross the second exchange on canonical_id.  No
+    doc-key set is ever materialized.  The final reducer for an id holds
+    its ``min``/``count`` partials and the distinct surface forms mapped
+    to it: bounded by the vocabulary (the same bound the per-form
+    verdict assumes), not by how many documents mention the id.
+    ``surfaces`` keeps the lowest-sorted ``MAX_SURFACES`` of them —
+    deterministic.
     """
-    all_cols = [F.col(c) for c in df.columns]
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*all_cols), F.lit(n_salt)))
-    p1 = salted.groupBy(*keys, "_salt").agg(*partials)
-    return p1.groupBy(*keys).agg(*finals)
-
-
-def canonical_entity_table(canon_entities: DataFrame,
-                           n_salt: int = 64,
-                           max_surfaces: int = 100) -> DataFrame:
-    """Per-canonical-entity rollup, safe for country-scale hot keys.
-
-    v1 merged ``collect_set(doc_key)`` partials in phase 2 — for one
-    canonical entity mentioned in 10^8 docs that is a 10^8-element set
-    on a single reducer.  Instead:
-
-    * ``n_docs`` — exact two-level count-distinct: distinct on
-      (canonical_id, doc_key) spreads a hot entity across reducers
-      because doc_key varies, then a partial-agg count per id.  No set
-      is ever materialized.
-    * ``surfaces`` — capped at ``max_surfaces`` per salt group AND
-      after the merge, bounding phase-2 state to
-      n_salt x max_surfaces strings (lowest-sorted surfaces win —
-      deterministic).
-    """
-    base = canon_entities.select(
-        "canonical_id", "type", "doc_key", "phrase")
-    rolled = salted_two_phase(
-        base,
-        keys=["canonical_id"],
-        partials=[
-            F.min("type").alias("_type"),
-            F.count("*").alias("_n"),
-            F.slice(F.array_sort(F.collect_set("phrase")),
-                    1, max_surfaces).alias("_surfaces"),
-        ],
-        finals=[
-            F.min("_type").alias("type"),
-            F.sum("_n").alias("n_clusters"),
-            F.slice(F.array_sort(F.array_distinct(
-                F.flatten(F.collect_list("_surfaces")))),
-                1, max_surfaces).alias("surfaces"),
-        ],
-        n_salt=n_salt)
-    n_docs = (base.select("canonical_id", "doc_key").distinct()
-              .groupBy("canonical_id").agg(F.count("*").alias("n_docs")))
-    return rolled.join(n_docs, "canonical_id")
+    return canon_entities.groupBy("canonical_id").agg(
+        F.min("type").alias("type"),
+        F.count("*").alias("n_clusters"),
+        F.slice(F.array_sort(F.collect_set("phrase")),
+                1, MAX_SURFACES).alias("surfaces"),
+        F.countDistinct("doc_key").alias("n_docs"))
 
 
 def edges(canon_triples: DataFrame) -> DataFrame:

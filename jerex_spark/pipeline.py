@@ -29,7 +29,7 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "lang", "source")
 
 
-def salted_repartition(df: DataFrame, key: str = "doc_key") -> DataFrame:
+def salted_repartition(df: DataFrame) -> DataFrame:
     """Skew-defeating repartition before the heavy extract UDF.
 
     Web corpora are skewed by host/language; hashing the full document
@@ -42,7 +42,7 @@ def salted_repartition(df: DataFrame, key: str = "doc_key") -> DataFrame:
     1x vs 2x); heavy-tailed per-doc cost has its own remedy
     (cost_balanced_repartition)."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-                          F.xxhash64(F.col(key), F.lit(DEFAULT.weight_seed)))
+                          F.xxhash64("doc_key", F.lit(DEFAULT.weight_seed)))
 
 
 def cost_balanced_repartition(df: DataFrame, cost: "F.Column",

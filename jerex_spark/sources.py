@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 ICEBERG_PREFIX = "iceberg:"
+FILES_PER_VALUE = 8    # parquet writer tasks per partition value
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -60,8 +61,7 @@ def read_table(spark: SparkSession, ref: str) -> DataFrame:
 
 
 def write_table(df: DataFrame, ref: str, mode: str = "overwrite",
-                partition_by: tuple[str, ...] = (),
-                files_per_value: int = 8) -> None:
+                partition_by: tuple[str, ...] = ()) -> None:
     """Partitioned write to an Iceberg table or a parquet path.
 
     Iceberg branch uses DataFrameWriterV2 (createOrReplace /
@@ -69,12 +69,12 @@ def write_table(df: DataFrame, ref: str, mode: str = "overwrite",
     resume-safe sink the lineage layer expects.
 
     Parquet branch repartitions on (partition columns, salt) with
-    ``files_per_value`` salt values: plain repartition on a
+    ``FILES_PER_VALUE`` salt values: plain repartition on a
     low-cardinality partition column (e.g. 3 rel_types) would funnel
     the whole corpus through |values| writer tasks — a straggler at
     scale — while no repartition leaves one file per (task, value),
     the small-files explosion.  The salt bounds both: |values| x
-    files_per_value writers, each owning one output file."""
+    FILES_PER_VALUE writers, each owning one output file."""
     if is_table_ref(ref):
         spark = df.sparkSession
         if not iceberg_available(spark):
@@ -94,7 +94,7 @@ def write_table(df: DataFrame, ref: str, mode: str = "overwrite",
         from pyspark.sql import functions as F
         salt = F.pmod(
             F.xxhash64(F.struct(*[F.col(c) for c in df.columns])),
-            F.lit(files_per_value))
+            F.lit(FILES_PER_VALUE))
         df = df.repartition(*([F.col(c) for c in partition_by] + [salt]))
         w = df.write.mode(mode).partitionBy(*partition_by)
     w.parquet(ref)

@@ -24,7 +24,7 @@ continuously-maintained KG needs:
 
 Scale notes: state is keyed by canonical_id and lives in the state
 store partition that owns the key, so hot entities update in one task
-per microbatch but the per-key state itself is O(max_surfaces) bytes —
+per microbatch but the per-key state itself is O(MAX_SURFACES) bytes —
 bounded regardless of how many documents mention the entity.
 """
 

@@ -5,7 +5,8 @@ The session turns on ``canChangeCachedPlanOutputPartitioning`` so AQE
 plans persisted DataFrames too; ``canonicalize_entities`` persists the
 per-form verdict so the canonical triples and the entity table share
 one LSH verify.  The differential test runs the pipeline composition
-with the conf on and off and requires identical written tables."""
+with the conf on and off and requires identical written tables; its
+entity table is also checked against a DuckDB oracle."""
 
 from __future__ import annotations
 
@@ -90,7 +91,8 @@ def _extract_text_udf():
 
 def _tables(spark, pages, alias):
     """scripts/run_pipeline.py's composition up to the written tables,
-    collected as sorted full rows."""
+    collected as sorted full rows, and the canonicalized entities they
+    were built from."""
     from jerex_spark.extract import extract_graph
     from jerex_spark.graph import entity_phrases
     from jerex_spark.pipeline import kg_tables, salted_repartition
@@ -104,12 +106,26 @@ def _tables(spark, pages, alias):
     canon = canonicalize_entities(ents, alias)
     ct = canonical_triples(t["triples"], canon).persist()
     try:
-        return [sorted(df.collect(), key=repr)
-                for df in (ct, canonical_entity_table(canon), edges(ct))]
+        return ([sorted(df.collect(), key=repr)
+                 for df in (ct, canonical_entity_table(canon), edges(ct))],
+                canon.select("canonical_id", "type", "phrase",
+                             "doc_key").toPandas())
     finally:
         graph.unpersist()
         ct.unpersist()
         release_persisted()
+
+
+def _entity_table_oracle(canon: pd.DataFrame) -> list[tuple]:
+    """canonical_entity_table in DuckDB SQL over the collected rows."""
+    import duckdb
+    con = duckdb.connect()
+    con.register("canon", canon)
+    return con.execute(
+        "SELECT canonical_id, min(type), count(*), "
+        "list_slice(list_sort(list_distinct(list(phrase))), 1, 100), "
+        "count(DISTINCT doc_key) "
+        "FROM canon GROUP BY canonical_id ORDER BY canonical_id").fetchall()
 
 
 def test_pipeline_tables_equal_with_and_without_cached_plan_aqe(spark):
@@ -120,12 +136,17 @@ def test_pipeline_tables_equal_with_and_without_cached_plan_aqe(spark):
         [("acme corp", "Q_ACME"), ("acme corporation", "Q_ACME"),
          ("globex", "Q_GLOBEX"), ("alice rivera", "Q_ALICE"),
          ("springfield", "Q_SPR")], ["alias", "canonical_id"])
-    on = _tables(spark, pages, alias)
+    on, canon = _tables(spark, pages, alias)
     prev = spark.conf.get(CONF)
     spark.conf.set(CONF, "false")
     try:
-        off = _tables(spark, pages, alias)
+        off, _ = _tables(spark, pages, alias)
     finally:
         spark.conf.set(CONF, prev)
     assert all(on), [len(x) for x in on]
     assert on == off
+    # the entity table against an independent DuckDB oracle
+    got = sorted((tuple(r[:3]) + (list(r.surfaces), r.n_docs)
+                  for r in on[1]), key=lambda r: r[0])
+    want = [tuple(r) for r in _entity_table_oracle(canon)]
+    assert got == want

@@ -105,37 +105,48 @@ def test_examples_html_tp_fp_fn_marking(spark, pages_graph, tmp_path):
 
 def test_canonical_entity_table_hot_key(spark):
     """Country-scale hot key: one canonical id covering most of the
-    corpus must aggregate with bounded per-reducer state — exact
-    n_docs via two-level count-distinct, surfaces capped."""
-    from jerex_spark.graph import canonical_entity_table
+    corpus must aggregate with bounded per-reducer state — exact n_docs
+    via Spark's distinct-aggregate rewrite, surfaces capped.  Every
+    100th doc carries a second cluster of the hot id, so n_clusters and
+    n_docs differ and the distinct count is exercised."""
+    from test_cached_plan_aqe import _scan_nodes
+
+    from jerex_spark.graph import MAX_SURFACES, canonical_entity_table
     n = 20000
     rows = [(f"d{i}", 0, "QHOT" if i % 20 else f"Q{i}", "LOC",
              f"surface_{i % 500}") for i in range(n)]
+    rows += [(f"d{i}", 1, "QHOT", "LOC", f"surface_{i % 500}")
+             for i in range(1, n, 100)]
     canon = spark.createDataFrame(
         rows, ["doc_key", "entity_idx", "canonical_id", "type", "phrase"])
-    et = canonical_entity_table(canon, max_surfaces=50)
-    hot = et.filter(F.col("canonical_id") == "QHOT").collect()[0]
+    et = canonical_entity_table(canon)
+    got = et.collect()
+    hot = next(r for r in got if r.canonical_id == "QHOT")
     assert hot.n_docs == n - n // 20     # exact distinct docs
-    assert hot.n_clusters == n - n // 20
-    assert len(hot.surfaces) == 50       # capped, not 475
-    assert hot.surfaces == sorted(hot.surfaces)
+    assert hot.n_clusters == n - n // 20 + n // 100
+    hot_surfaces = sorted({r[4] for r in rows if r[2] == "QHOT"})
+    assert len(hot_surfaces) > MAX_SURFACES
+    assert hot.surfaces == hot_surfaces[:MAX_SURFACES]   # capped, lowest
 
+    # Bounded reducer state: raw rows cross only the exchange keyed by
+    # (canonical_id, doc_key); the exchange keyed by canonical_id alone
+    # carries per-task partial aggregates, at most one record per id
+    # per map task, however many rows the hot id has.
+    nodes = _scan_nodes(et._jdf.queryExecution().executedPlan(), [])
+    shuffles = [nd for nd in nodes
+                if nd.getClass().getSimpleName() == "ShuffleExchangeExec"]
 
-def test_salted_two_phase_agg_matches_direct(spark):
-    from jerex_spark.graph import salted_two_phase
-    # hot key: 90% of rows share one canonical id
-    rows = [("QHOT" if i % 10 != 9 else f"Q{i}", f"d{i % 50}",
-             float(i % 7)) for i in range(2000)]
-    df = spark.createDataFrame(rows, ["k", "doc", "v"])
-    got = {(r.k, r.n, round(r.s, 4), r.nd) for r in salted_two_phase(
-        df, keys=["k"],
-        partials=[F.count("*").alias("_n"), F.sum("v").alias("_s"),
-                  F.collect_set("doc").alias("_d")],
-        finals=[F.sum("_n").alias("n"), F.round(F.sum("_s"), 4).alias("s"),
-                F.size(F.array_distinct(F.flatten(F.collect_list("_d"))))
-                .alias("nd")]).collect()}
-    want = {(r.k, r.n, round(r.s, 4), r.nd) for r in
-            df.groupBy("k").agg(
-                F.count("*").alias("n"), F.round(F.sum("v"), 4).alias("s"),
-                F.countDistinct("doc").alias("nd")).collect()}
-    assert got == want
+    def keys(nd):
+        exprs = nd.outputPartitioning().expressions()
+        return sorted(exprs.apply(i).name() for i in range(exprs.size()))
+
+    assert sorted(keys(nd) for nd in shuffles) == [
+        ["canonical_id"], ["canonical_id", "doc_key"]]
+    by_id = next(nd for nd in shuffles if keys(nd) == ["canonical_id"])
+    below = _scan_nodes(by_id.child(), [])
+    assert [keys(nd) for nd in below
+            if nd.getClass().getSimpleName() == "ShuffleExchangeExec"] \
+        == [["canonical_id", "doc_key"]]
+    written = by_id.metrics().apply("shuffleRecordsWritten").value()
+    map_tasks = by_id.shuffleDependency().rdd().getNumPartitions()
+    assert written <= len(got) * map_tasks, (written, len(got), map_tasks)

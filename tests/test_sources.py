@@ -7,9 +7,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from jerex_spark.sources import (iceberg_available, is_table_ref,
-                                 read_pages_stream, read_table,
-                                 table_name, write_table)
+from jerex_spark.sources import (FILES_PER_VALUE, iceberg_available,
+                                 is_table_ref, read_pages_stream,
+                                 read_table, table_name, write_table)
 
 
 def test_ref_dispatch():
@@ -31,13 +31,13 @@ def test_parquet_roundtrip_partitioned(spark, tmp_path):
     plan = (back.filter(F.col("rel_type") == "works_at")
             ._jdf.queryExecution().executedPlan().toString())
     assert "PartitionFilters: [isnotnull(rel_type" in plan, plan
-    # bounded files: between 1 and files_per_value per partition value
+    # bounded files: between 1 and FILES_PER_VALUE per partition value
     # (salted repartition — neither one-task-per-value stragglers nor
     # one file per (task, value) explosion)
     for v in ["works_at", "based_in", "partner_of"]:
         n_files = len(list(
             (tmp_path / "triples").glob(f"rel_type={v}/*.parquet")))
-        assert 1 <= n_files <= 8, (v, n_files)
+        assert 1 <= n_files <= FILES_PER_VALUE, (v, n_files)
 
 
 def test_iceberg_branch_gated(spark, tmp_path):
