@@ -174,14 +174,13 @@ def dedup_components(spark, sf_dir) -> DataFrame:
     downstream 100 TB flow filters ``is_canonical`` to materialize the
     deduplicated corpus.
 
-    The closure consumes the COLLAPSED pair graph (rep-level LSH pairs
-    + per-group star edges, dedup.lsh_pair_graph): identical closure
-    as the expanded pair list — dup groups are cliques and a star
-    spans a clique — at k-1 instead of C(k,2) edges per group."""
+    The closure consumes dedup.lsh_pair_graph, which on dup-heavy
+    corpora is the COLLAPSED pair graph (rep-level LSH pairs + per-group
+    star edges): identical closure as the expanded pair list — dup
+    groups are cliques and a star spans a clique — at k-1 instead of
+    C(k,2) edges per group."""
     d = _docs(spark, sf_dir)   # one parquet read shared with the graph
-    _dm, _g, rep_pairs, star = lsh_pair_graph(spark, sf_dir, docs_df=d)
-    comp = connected_components(rep_pairs.unionByName(star),
-                                "doc_a", "doc_b")
+    comp = connected_components(lsh_pair_graph(d), "doc_a", "doc_b")
     labeled = (d.select("doc_id")
                .join(comp, F.col("doc_id") == F.col("id"), "left")
                .select("doc_id",

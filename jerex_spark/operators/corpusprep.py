@@ -83,11 +83,9 @@ def decontaminate(spark, sf_dir) -> DataFrame:
 
     # gate each side BEFORE shingling: the explode+distinct only ever
     # runs over rows that reach the join
-    test_sh = (_shingles(spark, sf_dir,
-                         docs_df=docs.join(test, "doc_id", "left_semi"))
+    test_sh = (_shingles(docs.join(test, "doc_id", "left_semi"))
                .select("shingle").distinct())
-    train_sh = _shingles(spark, sf_dir,
-                         docs_df=docs.join(train, "doc_id", "left_semi"))
+    train_sh = _shingles(docs.join(train, "doc_id", "left_semi"))
 
     hits = train_sh.join(test_sh.withColumn("hit", F.lit(1)),
                          "shingle", "left")

@@ -72,8 +72,7 @@ def corpus_curation(spark, sf_dir) -> DataFrame:
     # only then (an id-dependent filter could drop just the rep and
     # disconnect members the expanded member-member pairs would have
     # kept together; such a filter must go back to minhash_lsh_pairs).
-    _dm, _g, rep_pairs, star = lsh_pair_graph(spark, sf_dir, docs_df=d)
-    edges = (rep_pairs.unionByName(star)
+    edges = (lsh_pair_graph(d)
              .join(surv.withColumnRenamed("doc_id", "doc_a"),
                    "doc_a", "left_semi")
              .join(surv.withColumnRenamed("doc_id", "doc_b"),

@@ -13,11 +13,12 @@ shuffle); the signature build is one partial-aggregable groupBy; the
 LSH bucket join is an equi-join on (hash_id, sig) — AQE handles bucket
 skew; candidate pairs are distinct-ed before any verify stage.  This
 is the standard scale path: candidates are O(near-dups), never O(n^2).
-The LSH family additionally collapses byte-identical texts BEFORE
-shingling (see _dup_groups below): signatures and verify verdicts are
-computed once per distinct text and expanded relationally, so the
-exact-dup mass that dominates web crawls costs linear expansion
-instead of quadratic candidate work.
+On dup-heavy corpora the LSH family collapses byte-identical texts
+BEFORE shingling: signatures and verify verdicts are computed once per
+distinct text and expanded relationally, so the exact-dup mass that
+dominates web crawls costs linear expansion instead of quadratic
+candidate work.  _lsh_rep_pairs is the single branch point that
+decides collapse vs plain for every LSH operator.
 """
 
 from __future__ import annotations
@@ -59,7 +60,7 @@ FROM documents GROUP BY md5(text)
 """
 
 
-def _shingle_array(k: int = SHINGLE_K):
+def _shingle_array():
     """Per-doc DISTINCT shingle array from the split token list ``l``.
     Shingles are distinct *within* a document, so the former row-level
     ``.distinct()`` — a full exchange + two sort-aggregates over every
@@ -82,11 +83,11 @@ def _shingle_array(k: int = SHINGLE_K):
     expression tree is identical."""
     return F.expr(
         f"array_distinct(transform("
-        f"sequence(0, greatest(size(`l`) - {k}, 0)), "
-        f"i -> concat_ws(' ', slice(`l`, i + 1, {k}))))")
+        f"sequence(0, greatest(size(`l`) - {SHINGLE_K}, 0)), "
+        f"i -> concat_ws(' ', slice(`l`, i + 1, {SHINGLE_K}))))")
 
 
-def _split_docs(spark, sf_dir, k: int, docs_df):
+def _split_docs(d):
     """Documents split to token lists, SPREAD by doc-id hash first.
 
     The shingle pipelines are compute-bound per row (split + transform
@@ -99,32 +100,30 @@ def _split_docs(spark, sf_dir, k: int, docs_df):
     skew spread (same rationale as pipeline.salted_repartition).
     Deterministic (xxhash64 of the id, guide §2.5), scale-adaptive
     (derived from the session's parallelism, not a constant)."""
-    d = _docs(spark, sf_dir) if docs_df is None else docs_df
     n = d.sparkSession.sparkContext.defaultParallelism
     return (d.repartition(n, F.xxhash64("doc_id"))
             .select("doc_id", F.split("text", " ").alias("l"))
-            .filter(F.size("l") >= k))
+            .filter(F.size("l") >= SHINGLE_K))
 
 
-def _shingle_arrays(spark, sf_dir, k: int = SHINGLE_K, docs_df=None):
+def _shingle_arrays(d):
     """(doc_id, sharr): the per-doc distinct shingle ARRAY — the
     un-exploded form the map-only signature build consumes."""
-    return (_split_docs(spark, sf_dir, k, docs_df)
-            .select("doc_id", _shingle_array(k).alias("sharr")))
+    return _split_docs(d).select("doc_id", _shingle_array().alias("sharr"))
 
 
-def _shingles(spark, sf_dir, k: int = SHINGLE_K, docs_df=None):
-    return (_shingle_arrays(spark, sf_dir, k, docs_df)
+def _shingles(d):
+    return (_shingle_arrays(d)
             .select("doc_id", F.explode("sharr").alias("shingle")))
 
 
-def _shingles_n(spark, sf_dir, k: int = SHINGLE_K, docs_df=None):
+def _shingles_n(d):
     """(doc_id, n, shingle): exploded distinct shingles with the doc's
     distinct-shingle count riding on every row.  ``n`` comes from the
     per-doc array (``size``), so Jaccard consumers need no separate
     per-doc count aggregation + re-join (two joins removed from the
     verify stage, guide §2.4)."""
-    return (_shingle_arrays(spark, sf_dir, k, docs_df)
+    return (_shingle_arrays(d)
             .select("doc_id", F.size("sharr").alias("n"),
                     F.explode("sharr").alias("shingle")))
 
@@ -143,13 +142,14 @@ def _shingles_n(spark, sf_dir, k: int = SHINGLE_K, docs_df=None):
 # expansion.  (Same design as embdup_cosine_lsh's vector collapse.)
 # Array-free on purpose: expansion is equi-joins on the text hash, so
 # a pathological million-copy text never materializes a giant
-# collect_list row.
-def _dup_groups(spark, sf_dir, docs_df=None):
+# collect_list row.  _lsh_rep_pairs is the one place that chooses
+# between this collapse and the plain per-doc pipeline; the group
+# tables are built only once it has chosen the collapse.
+def _dup_groups(d):
     """(docmap, groups): per-doc (doc_id, th=md5(text), n_toks) map and
     one representative (min doc_id) per distinct text.  Both persisted
     — the rep filter, the verdict expansion, and the intra-group pair
     build all reuse them."""
-    d = _docs(spark, sf_dir) if docs_df is None else docs_df
     # spread before the md5+split projection (same rationale as
     # _split_docs: a single-split scan would hash the whole corpus on
     # one task)
@@ -177,7 +177,7 @@ MAX_PLAIN_CLIQUE = 8
 MAX_PLAIN_DUP_FRAC = 0.02
 
 
-def _collapse_worthwhile(spark, sf_dir, docs_df=None) -> bool:
+def _collapse_worthwhile(d) -> bool:
     """ONE lean probe job deciding the collapse branch: group doc
     counts by a 64-bit text hash (long keys — partial-aggregable, no
     text shuffled, no cache materialization) and reduce to corpus
@@ -188,8 +188,7 @@ def _collapse_worthwhile(spark, sf_dir, docs_df=None) -> bool:
     merge distinct texts, which can only inflate the clique/mass
     estimates and flip toward the (always-correct) collapse path, so
     the probe is output-safe either way."""
-    g = ((_docs(spark, sf_dir) if docs_df is None else docs_df)
-         .groupBy(F.xxhash64("text").alias("h"))
+    g = (d.groupBy(F.xxhash64("text").alias("h"))
          .agg(F.count("*").alias("k")))
     r = g.agg(F.sum("k").alias("n"), F.count("*").alias("nd"),
               F.max("k").alias("mk")).first()
@@ -197,16 +196,6 @@ def _collapse_worthwhile(spark, sf_dir, docs_df=None) -> bool:
         return False
     dup_frac = 1.0 - r.nd / r.n
     return (r.mk or 0) > MAX_PLAIN_CLIQUE or dup_frac > MAX_PLAIN_DUP_FRAC
-
-
-def _rep_shingle_arrays(spark, sf_dir, groups, docs_df=None):
-    """Shingle-array table restricted to group representatives — the
-    filter sits BEFORE the shingle transform, so the k-1 duplicate
-    copies never shingle."""
-    reps = groups.select("doc_id")
-    d = _docs(spark, sf_dir) if docs_df is None else docs_df
-    return _shingle_arrays(spark, sf_dir,
-                           docs_df=d.join(reps, "doc_id", "left_semi"))
 
 
 def _sig_table(sharr_df):
@@ -247,6 +236,24 @@ def _rep_lsh_pairs(sharr_df):
     return (a.join(b, ["hash_id", "sig"])
             .filter(F.col("doc_a") < F.col("doc_b"))
             .select("doc_a", "doc_b").distinct())
+
+
+def _lsh_rep_pairs(d):
+    """(reps, rep_pairs, dg): the single collapse-vs-plain branch point
+    of the text LSH family.  The probe runs first, so the md5 group
+    tables are built (and persisted) only on the collapse branch.
+
+    Plain: ``reps`` is ``d`` itself, ``rep_pairs`` the per-doc LSH
+    pairs — identical texts still collide in every band, so dup pairs
+    are already in the set — and ``dg`` is None.  Collapse: ``reps`` is
+    ``d`` semi-joined to one representative per distinct text (BEFORE
+    the shingle transform, so the k-1 copies never shingle) and ``dg``
+    is the (docmap, groups) pair the callers expand verdicts with."""
+    if not _collapse_worthwhile(d):
+        return d, _rep_lsh_pairs(_shingle_arrays(d)), None
+    docmap, groups = _dup_groups(d)
+    reps = d.join(groups.select("doc_id"), "doc_id", "left_semi")
+    return reps, _rep_lsh_pairs(_shingle_arrays(reps)), (docmap, groups)
 
 
 def _expand_rep_pairs(rep_pairs, docmap, groups, carry=()):
@@ -294,56 +301,40 @@ shingles AS (
 
 # --- MinHash + LSH candidate pairs ---------------------------------------
 def minhash_lsh_pairs(spark, sf_dir):
-    """Candidate near-dup pairs: exact-dup collapse -> rep-level
-    shingle/MinHash/band join -> relational expansion back to member
-    pairs.  Bitwise-equal to the per-doc MINHASH_SQL oracle.  When the
-    collapse isn't worthwhile (_collapse_worthwhile: dup-free or
-    near-dup-free corpora) the plain per-doc pipeline runs instead —
-    identical sigs still collide in every band, so dup pairs are
-    emitted either way and the output is unchanged."""
+    """Candidate near-dup pairs: rep-level shingle/MinHash/band join
+    (_lsh_rep_pairs) -> on the collapse branch, relational expansion
+    back to member pairs plus the intra-group pairs.  Bitwise-equal to
+    the per-doc MINHASH_SQL oracle on both branches."""
     # ONE parquet read shared by every subtree of this query: each
     # spark.read.parquet call re-reads the file footer JVM-side
     # (~70ms measured) and the construction happens inside the timed
     # region — the reused plan node is identical to re-reading.
-    d = _docs(spark, sf_dir)
-    docmap, groups = _dup_groups(spark, sf_dir, docs_df=d)
-    if not _collapse_worthwhile(spark, sf_dir, docs_df=d):
-        return _rep_lsh_pairs(_shingle_arrays(spark, sf_dir, docs_df=d))
-    rp = _rep_lsh_pairs(_rep_shingle_arrays(spark, sf_dir, groups,
-                                            docs_df=d))
-    return (_expand_rep_pairs(rp, docmap, groups)
-            .unionByName(_intra_pairs(docmap, groups)))
+    _, rp, dg = _lsh_rep_pairs(_docs(spark, sf_dir))
+    if dg is None:
+        return rp
+    return _expand_rep_pairs(rp, *dg).unionByName(_intra_pairs(*dg))
 
 
-def lsh_pair_graph(spark, sf_dir, docs_df=None):
-    """(docmap, groups, rep_pairs, star_edges): the COLLAPSED form of
-    minhash_lsh_pairs for consumers that need the graph's closure, not
-    the pair list (operators/components.py, curation.py).  A dup group
-    is a clique in the expanded pair set; a star (rep -> each other
-    member) has the same transitive closure with k-1 edges instead of
-    C(k,2), so connected components over rep_pairs + star_edges equal
-    components over minhash_lsh_pairs output exactly — with edge count
-    linear, not quadratic, in duplicate mass.  Star edges carry the
-    same shingle-length gate as the pair pipeline (texts too short to
-    shingle never pair, so their dup groups stay singletons).  When
-    the collapse isn't worthwhile (_collapse_worthwhile) the plain
-    per-doc pair set already contains every intra-clique pair
-    (identical sigs collide in every band), so its closure equals the
-    collapsed form's and an empty frame replaces the star edges."""
-    d = _docs(spark, sf_dir) if docs_df is None else docs_df
-    docmap, groups = _dup_groups(spark, sf_dir, docs_df=d)
-    if not _collapse_worthwhile(spark, sf_dir, docs_df=d):
-        rp = _rep_lsh_pairs(_shingle_arrays(spark, sf_dir, docs_df=d))
-        star = spark.createDataFrame([], "doc_a bigint, doc_b bigint")
-        return docmap, groups, rp, star
-    rp = _rep_lsh_pairs(_rep_shingle_arrays(spark, sf_dir, groups,
-                                            docs_df=d))
+def lsh_pair_graph(d):
+    """(doc_a, doc_b) edges with the closure of minhash_lsh_pairs over
+    ``d``, for consumers that need components, not the pair list
+    (operators/components.py, curation.py).  On the collapse branch a
+    dup group is a clique in the expanded pair set; a star (rep -> each
+    other member) has the same transitive closure with k-1 edges
+    instead of C(k,2), so the edges are rep pairs + star edges — edge
+    count linear, not quadratic, in duplicate mass.  Star edges carry
+    the same shingle-length gate as the pair pipeline (texts too short
+    to shingle never pair, so their dup groups stay singletons)."""
+    _, rp, dg = _lsh_rep_pairs(d)
+    if dg is None:
+        return rp
+    docmap, groups = dg
     star = (docmap.filter(F.col("n_toks") >= SHINGLE_K)
             .join(groups.select("th", F.col("doc_id").alias("rep")), "th")
             .filter(F.col("doc_id") != F.col("rep"))
             .select(F.col("rep").alias("doc_a"),
                     F.col("doc_id").alias("doc_b")))
-    return docmap, groups, rp, star
+    return rp.unionByName(star)
 
 
 MINHASH_SQL = f"""
@@ -361,19 +352,17 @@ FROM sig a JOIN sig b
 
 
 # --- exact n-gram Jaccard for candidate pairs ----------------------------
-def _guard_allpairs(df, what: str, scale_twin: str,
-                    max_rows: int | None = None) -> None:
+def _guard_allpairs(df, what: str, scale_twin: str) -> None:
     """Refuse to launch an all-pairs exact baseline on a big input.
     The count is one extra (cheap, parquet-footer-driven) action —
     acceptable for a declared baseline whose whole point is small-scale
     ground truth."""
-    max_rows = MAX_ALLPAIRS_ROWS if max_rows is None else max_rows
     n = df.count()
-    if n > max_rows:
+    if n > MAX_ALLPAIRS_ROWS:
         raise ValueError(
             f"{what} is an O(n^2) exact baseline capped at "
-            f"{max_rows} input rows (got {n}); use {scale_twin} — the "
-            f"LSH-gated scale path — on corpora")
+            f"{MAX_ALLPAIRS_ROWS} input rows (got {n}); use {scale_twin} "
+            f"— the LSH-gated scale path — on corpora")
 
 
 def ngram_jaccard(spark, sf_dir, shingles=None):
@@ -389,7 +378,7 @@ def ngram_jaccard(spark, sf_dir, shingles=None):
         d = _docs(spark, sf_dir)
         _guard_allpairs(d.select("doc_id"),
                         "ngram_jaccard", "dedup_lsh_verified")
-        shingles = _shingles_n(spark, sf_dir, docs_df=d)
+        shingles = _shingles_n(d)
     # used twice below (both join sides): cache
     sh = _persist(shingles)
     a = sh.select(F.col("doc_id").alias("doc_a"),
@@ -434,8 +423,11 @@ WHERE ROUND(inter / CAST(ca.n + cb.n - inter AS DOUBLE), 4) >= 0.1
 # BEFORE the intersection self-join, so the self-join's inputs carry
 # only candidate docs — Catalyst cannot derive that restriction itself
 # from a post-hoc inner join (the v1 mistake: full-corpus shingle
-# self-join, then filter).
-def dedup_lsh_verified(spark, sf_dir, threshold: float = 0.5):
+# self-join, then filter).  The Jaccard cut is shared with the oracle SQL.
+JACCARD_VERIFY_MIN = 0.5
+
+
+def dedup_lsh_verified(spark, sf_dir):
     """Verify runs at the REPRESENTATIVE level too: Jaccard is a
     function of the two shingle sets, so identical texts share every
     verdict — k copies of a page cost ONE exact-Jaccard computation,
@@ -443,15 +435,9 @@ def dedup_lsh_verified(spark, sf_dir, threshold: float = 0.5):
     identity.  The signature side shingles the reps once (consumed by
     one partial-aggregable groupBy); the verify side shingles only the
     LSH-candidate docs (semi-join gate BEFORE the explode, as before).
-    When the collapse isn't worthwhile (_collapse_worthwhile) the rep
-    level IS the doc level — identical texts pair through the regular
-    LSH machinery with jaccard 1.0 — and verdicts are returned
-    directly, skipping expansion and intra."""
-    d = _docs(spark, sf_dir)   # ONE parquet read for every subtree
-    docmap, groups = _dup_groups(spark, sf_dir, docs_df=d)
-    dups = _collapse_worthwhile(spark, sf_dir, docs_df=d)
-    rep_docs = (d.join(groups.select("doc_id"), "doc_id", "left_semi")
-                if dups else None)
+    On the plain branch of _lsh_rep_pairs the reps are the docs and the
+    verdicts are returned directly."""
+    reps, rp, dg = _lsh_rep_pairs(_docs(spark, sf_dir))
     # rp is REFERENCED FIVE TIMES downstream (both cand_docs legs, the
     # verdict join, and via the gated shingle table's lineage), so its
     # ~500-line subtree used to be re-canonicalized for every cache
@@ -461,10 +447,7 @@ def dedup_lsh_verified(spark, sf_dir, threshold: float = 0.5):
     # downstream reference plans against a leaf.  Same durability trade
     # as components.py's closure loop — at cluster scale with executor
     # churn swap for a reliable checkpoint(), same call shape.
-    rp = _rep_lsh_pairs(
-        _shingle_arrays(spark, sf_dir,
-                        docs_df=d if rep_docs is None else rep_docs)
-    ).localCheckpoint()
+    rp = rp.localCheckpoint()
     cand_docs = (rp.select(F.col("doc_a").alias("doc_id"))
                  .unionByName(rp.select(F.col("doc_b").alias("doc_id")))
                  .distinct())
@@ -477,20 +460,16 @@ def dedup_lsh_verified(spark, sf_dir, threshold: float = 0.5):
     # No broadcast hint: AQE converts the semi-join to broadcast at
     # runtime when the candidate set is small (the common case) but
     # degrades to a shuffle join gracefully when a corpus is dup-heavy.
-    gated_docs = ((d if rep_docs is None else rep_docs)
-                  .join(cand_docs, "doc_id", "left_semi"))
-    jac = ngram_jaccard(spark, sf_dir,
-                        shingles=_shingles_n(spark, sf_dir,
-                                             docs_df=gated_docs))
+    gated_docs = reps.join(cand_docs, "doc_id", "left_semi")
+    jac = ngram_jaccard(spark, sf_dir, shingles=_shingles_n(gated_docs))
     rep_ver = (rp.join(jac, ["doc_a", "doc_b"])
-               .filter(F.col("jaccard") >= threshold))
-    if not dups:
+               .filter(F.col("jaccard") >= JACCARD_VERIFY_MIN))
+    if dg is None:
         return rep_ver.select("doc_a", "doc_b", "jaccard")
-    cross = _expand_rep_pairs(rep_ver, docmap, groups, carry=("jaccard",))
+    cross = _expand_rep_pairs(rep_ver, *dg, carry=("jaccard",))
     # identical shingle sets: jaccard is exactly 1.0 (>= any threshold
     # in (0,1]; the oracle's ROUND(1.0, 4) is the same double)
-    intra = _intra_pairs(docmap, groups,
-                         carry=(F.lit(1.0).alias("jaccard"),))
+    intra = _intra_pairs(*dg, carry=(F.lit(1.0).alias("jaccard"),))
     return cross.unionByName(intra)
 
 
@@ -518,7 +497,8 @@ FROM cand c
 JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
 JOIN counts ca ON ca.doc_id = c.doc_a
 JOIN counts cb ON cb.doc_id = c.doc_b
-WHERE ROUND(inter / CAST(ca.n + cb.n - inter AS DOUBLE), 4) >= 0.5
+WHERE ROUND(inter / CAST(ca.n + cb.n - inter AS DOUBLE), 4)
+      >= {JACCARD_VERIFY_MIN}
 """
 
 
@@ -573,9 +553,7 @@ FROM p WHERE cos6 >= {COS_DUP_THRESHOLD}
 EMBDUP_N_BANDS = 16
 
 
-def embdup_cosine_lsh(spark, sf_dir, threshold: float = COS_DUP_THRESHOLD,
-                      n_bands: int | None = None,
-                      band_bits: int | None = None):
+def embdup_cosine_lsh(spark, sf_dir, threshold: float = COS_DUP_THRESHOLD):
     """Embedding-cosine near-dup, scale path: sign-LSH band blocking
     (shared with similarity.lsh_topk) -> candidate-pair dedup -> exact
     cosine once per unique pair.  Candidates are O(bucket collisions),
@@ -585,7 +563,7 @@ def embdup_cosine_lsh(spark, sf_dir, threshold: float = COS_DUP_THRESHOLD,
     deterministic at a fixed corpus -> oracle-checked against frozen
     golden rows (scripts/golden_ann.py).
 
-    (n_bands, band_bits) default to similarity.lsh_schedule: bits grow
+    (n_bands, band_bits) come from similarity.lsh_schedule: bits grow
     with the corpus so bucket sizes stay ~constant, bands grow so pairs
     at ``threshold`` keep >= DESIGN_RECALL collision probability — no
     manual dial at any corpus size.
@@ -640,11 +618,8 @@ def embdup_cosine_lsh(spark, sf_dir, threshold: float = COS_DUP_THRESHOLD,
         # the count also materializes the persisted table we join below
         n_reps = groups.count()
         reps = groups.select("vec_id", "vec", "norm")
-    if n_bands is None or band_bits is None:
-        n_bands, band_bits = lsh_schedule(
-            n_reps, design_cos=threshold,
-            n_bands=n_bands, band_bits=band_bits,
-            min_bands=EMBDUP_N_BANDS)
+    n_bands, band_bits = lsh_schedule(n_reps, design_cos=threshold,
+                                      min_bands=EMBDUP_N_BANDS)
     # persisted: the band self-join consumes ba on BOTH sides and Spark
     # has no cross-plan CSE, so an unpersisted ba would run the
     # Arrow-batched bucketing UDF twice over the corpus.  Partitioned

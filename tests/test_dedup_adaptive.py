@@ -15,11 +15,16 @@ import duckdb
 import pandas as pd
 import pytest
 
+from jerex_spark import caching
 from jerex_spark.caching import release_persisted
+from jerex_spark.operators.components import (DEDUP_COMPONENTS_SQL,
+                                              dedup_components)
 from jerex_spark.operators.dedup import (DEDUP_VERIFIED_SQL, MINHASH_SQL,
                                          _collapse_worthwhile,
                                          dedup_lsh_verified,
+                                         lsh_pair_graph,
                                          minhash_lsh_pairs)
+from jerex_spark.operators.textops import _docs
 
 BASE = [
     "the quick brown fox jumps over the lazy dog tonight",
@@ -67,7 +72,20 @@ def test_branch_detection(spark, corpus_dir):
     # fixture's dup fraction (5/11) far exceeds MAX_PLAIN_DUP_FRAC, so
     # it must pick the collapse; the dup-free twin must not.
     d, dup_heavy = corpus_dir
-    assert _collapse_worthwhile(spark, d) is dup_heavy
+    assert _collapse_worthwhile(_docs(spark, d)) is dup_heavy
+
+
+def test_plain_branch_builds_no_text_groups(spark, corpus_dir):
+    # the probe runs before the md5 group tables are built, so the
+    # plain branch persists no (doc_id, th, ...) docmap / (th, ...)
+    # groups frame that nothing would read
+    d, dup_heavy = corpus_dir
+    release_persisted()
+    minhash_lsh_pairs(spark, d)
+    dedup_lsh_verified(spark, d)
+    lsh_pair_graph(_docs(spark, d))
+    built = any("th" in df.columns for df in caching._PERSISTED)
+    assert built is dup_heavy
 
 
 def test_minhash_pairs_match_oracle_both_branches(spark, corpus_dir):
@@ -85,11 +103,20 @@ def test_verified_match_oracle_both_branches(spark, corpus_dir):
     assert got == _duck(d, DEDUP_VERIFIED_SQL)
 
 
+def test_components_match_oracle_both_branches(spark, corpus_dir):
+    # the closure over lsh_pair_graph's edges (rep pairs + star edges
+    # on the collapse branch, per-doc pairs on the plain one) equals
+    # the closure over the expanded per-doc pair list
+    d, _ = corpus_dir
+    got = sorted(tuple(r) for r in dedup_components(spark, d).collect())
+    assert got == _duck(d, DEDUP_COMPONENTS_SQL)
+    assert any(not r[3] for r in got), "fixture must produce a cluster"
+
+
 def test_components_collapse_branch(spark):
     """dedup_components over an ALL-identical corpus: rep pairs are
     empty, the closure is carried entirely by star edges — one cluster,
     min doc_id canonical."""
-    from jerex_spark.operators.components import dedup_components
     pdf = pd.DataFrame({"doc_id": [7, 3, 11],
                         "text": ["same exact text repeated here ok"] * 3})
     with tempfile.TemporaryDirectory() as d:
