@@ -23,6 +23,8 @@ decides collapse vs plain for every LSH operator.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -552,13 +554,94 @@ FROM p WHERE cos6 >= {COS_DUP_THRESHOLD}
 # *derives* 16 x 4 at n=500)
 EMBDUP_N_BANDS = 16
 
+# Bucket rows per side of one scored block: a scoring task holds one
+# Arrow batch, its current bucket's vectors and one COS_TILE_ROWS^2
+# block of doubles (2 MB), however large a bucket grows.
+COS_TILE_ROWS = 512
+
+
+def _bucket_cosines(ids, X, norms, cut: float, tile: int) -> list:
+    """[(id_a, id_b, cos) arrays] for the pairs of ONE (band, bucket)
+    whose cosine is >= ``cut``; ``ids`` ascend, so id_a < id_b.
+
+    Bitwise contract: each dot product is similarity._DOT's strict left
+    fold — acc starts at 0.0 and adds x[k] * y[k] for k = 0..dim-1 —
+    run as dim rank-1 updates of a tile x tile block, then divided by
+    the product of the Spark-computed norms.  Every cosine is therefore
+    the Catalyst per-pair form's, bit for bit; rounding stays in Spark
+    (numpy rounds half-to-even, Spark's ROUND is HALF_UP).  A zero-norm
+    vector has no cosine with its bucket-mates: raise, as the Catalyst
+    division does under ANSI, instead of emitting NaNs."""
+    m = len(ids)
+    if m < 2:
+        return []
+    zero = np.flatnonzero(norms == 0.0)
+    if len(zero):
+        raise ZeroDivisionError(
+            f"embdup_cosine_lsh: vec_id {ids[zero[0]]} has norm 0, so its "
+            f"cosine with the {m - 1} other vectors of its LSH bucket is "
+            f"undefined")
+    XT = np.ascontiguousarray(X.T)                     # (dim, m)
+    out = []
+    for i0 in range(0, m, tile):
+        for j0 in range(i0, m, tile):
+            A, B = XT[:, i0:i0 + tile], XT[:, j0:j0 + tile]
+            acc = np.zeros((A.shape[1], B.shape[1]))
+            for a, b in zip(A, B):
+                acc += np.multiply.outer(a, b)
+            cos = acc / np.multiply.outer(norms[i0:i0 + tile],
+                                          norms[j0:j0 + tile])
+            keep = ~(cos < cut)    # keeps NaN: Spark orders it above all
+            if i0 == j0:
+                keep = np.triu(keep, 1)
+            ii, jj = np.nonzero(keep)
+            out.append((ids[i0 + ii], ids[j0 + jj], cos[ii, jj]))
+    return out
+
+
+def _score_buckets(batches, cut: float, tile: int):
+    """mapInPandas body over one partition of band rows sorted by
+    (band, bucket, vec_id).  Rows are held until the (band, bucket) key
+    changes, so a bucket split across Arrow batches is scored whole;
+    at most one output frame per input batch."""
+    held, key = [], None
+
+    def frame(out):
+        a, b, c = (np.concatenate(x) for x in zip(*out))
+        return pd.DataFrame({"id_a": a, "id_b": b, "cos": c})
+
+    def score():
+        ids, X, norms = (np.concatenate(x) for x in zip(*held))
+        return _bucket_cosines(ids, X, norms, cut, tile)
+
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        band, bucket = pdf["band"].to_numpy(), pdf["bucket"].to_numpy()
+        ids, norms = pdf["vec_id"].to_numpy(), pdf["norm"].to_numpy()
+        X = np.stack(pdf["vec"].to_numpy())
+        cuts = np.flatnonzero((band[1:] != band[:-1])
+                              | (bucket[1:] != bucket[:-1])) + 1
+        out = []
+        for s, e in zip(np.r_[0, cuts], np.r_[cuts, len(pdf)]):
+            if (band[s], bucket[s]) != key:
+                if held:
+                    out += score()
+                held, key = [], (band[s], bucket[s])
+            held.append((ids[s:e], X[s:e], norms[s:e]))
+        if out:
+            yield frame(out)
+    if held and (out := score()):
+        yield frame(out)
+
 
 def embdup_cosine_lsh(spark, sf_dir, threshold: float = COS_DUP_THRESHOLD):
     """Embedding-cosine near-dup, scale path: sign-LSH band blocking
-    (shared with similarity.lsh_topk) -> candidate-pair dedup -> exact
-    cosine once per unique pair.  Candidates are O(bucket collisions),
-    never O(n^2); high-cosine pairs collide in some band with high
-    probability (recall vs the exact baseline pinned >= 0.9 in
+    (shared with similarity.lsh_topk) -> exact cosines of every pair
+    inside each bucket, one numpy kernel call per partition -> pair
+    dedup.  Candidates are O(bucket collisions), never O(n^2);
+    high-cosine pairs collide in some band with high probability
+    (recall vs the exact baseline pinned >= 0.9 in
     tests/test_similarity.py).  Approximate by construction but
     deterministic at a fixed corpus -> oracle-checked against frozen
     golden rows (scripts/golden_ann.py).
@@ -578,15 +661,19 @@ def embdup_cosine_lsh(spark, sf_dir, threshold: float = COS_DUP_THRESHOLD):
        and cross-group verdicts expand to all member pairs.  Without
        this, k copies of one vector cost k^2 candidate work for pairs
        whose answer is known.
-    2. The band join carries only ids (buckets computed from the
-       persisted vectors, payload dropped), under a shuffle_hash hint:
-       both sides are O(n_distinct x bands) and their size estimate
-       passes through a pandas UDF + posexplode, which Catalyst
-       underestimates enough to pick a broadcast build (observed
-       OOM at the 10x probe).
-    3. Candidate pairs are DISTINCT'd before the vectors re-join: a
-       true near-dup colliding in all B bands costs one cosine, not
-       B."""
+    2. Band rows keep their vector and norm and are shuffled ONCE, on
+       (band, bucket), then sorted by (band, bucket, vec_id) within each
+       partition.  One mapInPandas call per partition streams the
+       sorted rows and scores each bucket's pairs as numpy blocks
+       (_bucket_cosines: bitwise the Catalyst fold), emitting only
+       pairs with cos >= threshold - 1e-6.  No candidate-pair row is
+       ever materialized, and no dot product runs interpreted (Catalyst
+       evaluates the zip_with/aggregate fold without codegen).
+    3. Spark rounds (HALF_UP), applies the threshold and drops the
+       repeats of a pair that shares buckets in several bands (it is
+       scored once per shared band).  Only pairs at the threshold or
+       above leave the kernel, so this distinct sees about as many rows
+       as the output, not the candidate pairs."""
     from ..caching import persist_tracked
     from .similarity import (_DOT, _band_buckets, _emb, _with_norm,
                              lsh_schedule)
@@ -620,56 +707,31 @@ def embdup_cosine_lsh(spark, sf_dir, threshold: float = COS_DUP_THRESHOLD):
         reps = groups.select("vec_id", "vec", "norm")
     n_bands, band_bits = lsh_schedule(n_reps, design_cos=threshold,
                                       min_bands=EMBDUP_N_BANDS)
-    # persisted: the band self-join consumes ba on BOTH sides and Spark
-    # has no cross-plan CSE, so an unpersisted ba would run the
-    # Arrow-batched bucketing UDF twice over the corpus.  Partitioned
-    # by the join key AT PERSIST TIME (guide §2.4: two operations keyed
-    # the same way share one exchange): the cached partitioning feeds
-    # both join sides, so the self-join plans NO exchange of its own —
-    # one shuffle of (id, band, bucket) instead of two — and, since the
-    # join's row estimate is its tiny input (AQE cannot know the
-    # within-bucket pair generation explodes ~60x), the explicit
-    # partition count keeps the exploding join + partial pair-distinct
-    # on all cores instead of the 1-2 partitions AQE coalesces a ~MB
-    # exchange to (measured 1.10s -> 0.45s for the stage at sf0.1).
     # the band-bucket build is spread by vec_id first: its input is the
     # cached vector table, whose partitioning follows the (possibly
     # single-split) scan, and the bucketing matmul + posexplode are
     # per-row compute that would otherwise run on that one task (same
     # rationale as _split_docs; measured one 0.29s single-task stage at
-    # sf0.1)
+    # sf0.1).  The (band, bucket) exchange has an explicit partition
+    # count, so AQE keeps the scoring on all cores instead of
+    # coalescing its few-MB input to one or two tasks.
     n_par = spark.sparkContext.defaultParallelism
-    ba = persist_tracked(
-        _band_buckets(reps.repartition(n_par, "vec_id"),
-                      n_bands=n_bands, band_bits=band_bits)
-        .select("vec_id", "band", "bucket")
-        .repartition(n_par, "band", "bucket"))
-    # the explicit repartition below PINS the pair-distinct shuffle at
-    # full parallelism on the same (id_a, id_b) keys the distinct
-    # already hashes by — no second exchange — because the stage ABOVE
-    # it (exact cosine: a 64-term HOF fold per pair) is compute-bound
-    # per row while its shuffled bytes are two longs per pair, exactly
-    # the case AQE's size-based coalescing mis-sizes (measured: AQE
-    # coalesced the candidate table to 10 partitions and the cosine
-    # stage ran 1.42s; pinned at defaultParallelism it spreads to all
-    # cores).  Scale-adaptive: derived from session parallelism.
-    pairs = (ba.join(ba.select(F.col("vec_id").alias("id_b"),
-                               "band", "bucket").hint("shuffle_hash"),
-                     ["band", "bucket"])
-             .filter(F.col("vec_id") < F.col("id_b"))
-             .select(F.col("vec_id").alias("id_a"), "id_b")
-             .repartition(spark.sparkContext.defaultParallelism,
-                          "id_a", "id_b")
-             .distinct())
-    va = reps.select(F.col("vec_id").alias("id_a"),
-                     F.col("vec").alias("va"), F.col("norm").alias("na"))
-    vb = reps.select(F.col("vec_id").alias("id_b"),
-                     F.col("vec").alias("vb"), F.col("norm").alias("nb"))
-    cos = F.expr(_DOT.format(a="va", b="vb")) / (
-        F.col("na") * F.col("nb"))
-    rep_pairs = (pairs.join(va, "id_a").join(vb, "id_b")
-                 .select("id_a", "id_b", F.round(cos, 6).alias("cos6"))
-                 .filter(F.col("cos6") >= threshold))
+    # the kernel's cut sits below every raw cosine that HALF_UP
+    # rounds to >= threshold at 6 digits; Spark applies the real test
+    cut, tile = threshold - 1e-6, COS_TILE_ROWS
+
+    def score_buckets(batches):
+        return _score_buckets(batches, cut, tile)
+
+    rep_pairs = (_band_buckets(reps.repartition(n_par, "vec_id"),
+                               n_bands=n_bands, band_bits=band_bits)
+                 .repartition(n_par, "band", "bucket")
+                 .sortWithinPartitions("band", "bucket", "vec_id")
+                 .mapInPandas(score_buckets,
+                              "id_a long, id_b long, cos double")
+                 .select("id_a", "id_b", F.round("cos", 6).alias("cos6"))
+                 .filter(F.col("cos6") >= threshold)
+                 .distinct())
     if dup_free:
         return rep_pairs.select("id_a", "id_b",
                                 F.round("cos6", 4).alias("cos"))

@@ -22,9 +22,14 @@ bucket joins, candidate set construction, sequential-fold cosines,
 HALF_UP rounding, window top-k, thresholding, and the exact-dup
 collapse/expansion.
 
-Numeric contract: Spark computes dot products as Catalyst
-``aggregate(zip_with(...))`` — a strict left-to-right fold over IEEE
-doubles.  The replicas here accumulate dimension-by-dimension in the
+Numeric contract: Spark computes dot products as a strict
+left-to-right fold over IEEE doubles.  Norms, the lsh_topk/ivf_topk
+cosines and the embdup self-cosine use Catalyst
+``aggregate(zip_with(...))``; embdup_cosine_lsh's bucket pairs use the
+numpy kernel ``operators.dedup._bucket_cosines``, which runs the same
+fold as dim rank-1 updates (acc = 0.0, then acc += x[k] * y[k] for
+k = 0..dim-1).  The kernel imports nothing from this module.  The
+replicas here accumulate dimension-by-dimension in the
 same order, so values are expected BITWISE identical, and every
 reassociation-sensitive decision (hyperplane sign, cell argmin,
 rounding boundary) additionally asserts a safety margin at freeze

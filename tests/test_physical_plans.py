@@ -6,6 +6,8 @@ the extract stage contains exactly one (intentional, salted) exchange.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -176,12 +178,15 @@ def test_ann_joins_never_build_the_corpus_side(spark, sf001):
     plan = _plan(ivf_topk(spark, sf001))
     assert "BroadcastHashJoin" in plan
 
-    # the band self-join must stay a partitioned (shuffle) join: both
-    # sides are O(n x bands)
+    # embdup scores buckets in place: the O(n x bands) band rows are
+    # shuffled once on (band, bucket) into one mapInPandas kernel and
+    # nothing is broadcast
     plan = _plan(embdup_cosine_lsh(spark, sf001))
-    head = plan.split("ShuffledHashJoin", 1)
-    assert len(head) == 2, "band self-join lost its shuffle-hash shape"
-    assert "bucket" in head[1].splitlines()[0]
+    assert "BroadcastExchange" not in plan
+    assert plan.count("MapInPandas") == 1
+    feed = plan.split("MapInPandas", 1)[1].split("Exchange ", 1)[1]
+    assert re.match(r"hashpartitioning\(band#\d+, bucket#\d+, \d+\)",
+                    feed), feed.splitlines()[0]
 
 
 def test_kg_maintenance_plans(spark, sf001):

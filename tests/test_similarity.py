@@ -195,6 +195,115 @@ def test_embdup_lsh_collapses_exact_duplicates(spark, tmp_path):
     assert approx == exact
 
 
+def _kernel_vs_catalyst(spark, d):
+    """(kernel, catalyst) unrounded cosines of every pair of ``d``'s
+    vectors: the kernel scores them all as one multi-tile bucket,
+    Catalyst as _DOT / (na * nb) per pair."""
+    import numpy as np
+
+    from jerex_spark.operators.dedup import _bucket_cosines
+    from jerex_spark.operators.similarity import _DOT, _emb, _with_norm
+    e = _with_norm(_emb(spark, d))
+    pdf = e.toPandas().sort_values("vec_id")
+    got = _bucket_cosines(pdf["vec_id"].to_numpy(),
+                          np.stack(pdf["vec"].to_numpy()),
+                          pdf["norm"].to_numpy(), cut=-2.0, tile=64)
+    kernel = {(int(a), int(b)): float(c)
+              for ia, ib, cc in got for a, b, c in zip(ia, ib, cc)}
+    a = e.select(F.col("vec_id").alias("id_a"), F.col("vec").alias("va"),
+                 F.col("norm").alias("na"))
+    b = e.select(F.col("vec_id").alias("id_b"), F.col("vec").alias("vb"),
+                 F.col("norm").alias("nb"))
+    cos = F.expr(_DOT.format(a="va", b="vb")) / (F.col("na") * F.col("nb"))
+    ref = {(r.id_a, r.id_b): r.cos for r in
+           a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+           .select("id_a", "id_b", cos.alias("cos")).collect()}
+    assert len(ref) == len(pdf) * (len(pdf) - 1) // 2
+    return kernel, ref
+
+
+def test_embdup_kernel_cosines_bitwise(spark, sf0001, tmp_path):
+    """The bucket kernel's cosines are the Catalyst per-pair fold's bit
+    for bit, unrounded, on the sf0.001 vectors and on full-precision
+    doubles (float32 components multiply exactly in double, which would
+    hide a fused multiply-add).  End to end at threshold 0.0 (every
+    pair with cos >= 0 survives, not just the few near-dups): each pair
+    embdup_cosine_lsh emits is in the exact baseline with a bit-equal
+    cos."""
+    import numpy as np
+    import pandas as pd
+
+    from jerex_spark.operators.dedup import (embdup_cosine_exact,
+                                             embdup_cosine_lsh)
+    X = np.random.default_rng(3).normal(size=(200, 64))
+    pd.DataFrame({"vec_id": range(len(X)), "embedding": list(X)}) \
+        .to_parquet(tmp_path / "embeddings.parquet", index=False)
+    for d in (sf0001, str(tmp_path)):
+        kernel, ref = _kernel_vs_catalyst(spark, d)
+        assert kernel.keys() == ref.keys()
+        assert all(kernel[k].hex() == ref[k].hex() for k in ref), d
+
+    exact = {(r.id_a, r.id_b): r.cos for r in
+             embdup_cosine_exact(spark, sf0001, threshold=0.0).collect()}
+    lsh = embdup_cosine_lsh(spark, sf0001, threshold=0.0).collect()
+    assert len(lsh) > 1000
+    assert all(exact[(r.id_a, r.id_b)].hex() == r.cos.hex() for r in lsh)
+
+
+def test_embdup_kernel_batch_and_tile_invariant(spark, sf0001,
+                                                monkeypatch):
+    """7-row Arrow batches split every bucket across batches and 5-row
+    tiles split every bucket into many blocks: the output must equal
+    the default run's, so held rows are scored as whole buckets and
+    tiles cover each pair exactly once."""
+    import jerex_spark.operators.dedup as D
+
+    def run():
+        return sorted((r.id_a, r.id_b, r.cos.hex()) for r in
+                      D.embdup_cosine_lsh(spark, sf0001,
+                                          threshold=0.0).collect())
+
+    base = run()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    monkeypatch.setattr(D, "COS_TILE_ROWS", 5)
+    spark.conf.set(key, "7")
+    try:
+        small = run()
+    finally:
+        spark.conf.set(key, old)
+    assert base and small == base
+
+
+def test_embdup_lsh_zero_norm_raises(spark, tmp_path):
+    """A zero vector has no cosine with its bucket-mates (the Catalyst
+    division raises DIVIDE_BY_ZERO under ANSI): the kernel must raise
+    and name it, not emit nothing."""
+    import numpy as np
+    import pandas as pd
+
+    from jerex_spark.operators.dedup import (COS_DUP_THRESHOLD,
+                                             EMBDUP_N_BANDS,
+                                             embdup_cosine_lsh)
+    from jerex_spark.operators.similarity import (_plane_weights,
+                                                  lsh_schedule)
+    n_bands, band_bits = lsh_schedule(6, design_cos=COS_DUP_THRESHOLD,
+                                      min_bands=EMBDUP_N_BANDS)
+    P = np.array([_plane_weights(p) for p in range(n_bands * band_bits)]).T
+    # vec_id 1 is the sum of band 0's planes, so it projects >= 0 on
+    # all of them: the same band-0 bucket as the zero vector (vec_id 3)
+    X = np.random.default_rng(5).normal(size=(6, 64))
+    X[1] = P[:, :band_bits].sum(axis=1)
+    X[3] = 0.0
+    assert ((X[1] @ P[:, :band_bits]) >= 0).all()
+    pd.DataFrame({
+        "vec_id": range(6),
+        "embedding": [[float(v) for v in x] for x in X],
+    }).to_parquet(tmp_path / "embeddings.parquet", index=False)
+    with pytest.raises(Exception, match="vec_id 3 has norm 0"):
+        embdup_cosine_lsh(spark, str(tmp_path)).collect()
+
+
 def test_lsh_schedule_holds_recall_past_band_cap():
     """Past ~65k rows the recall-pinned band count exceeds MAX_BANDS:
     the schedule must shorten the codes (warning about bucket growth)
